@@ -389,6 +389,15 @@ _DIRECT_SCAN_KINDS = ("hll", "cms", "tdigest", "kll", "bloom")
 _DIRECT_SCAN_KEYED_KINDS = ("hll", "cms", "bloom")
 
 
+def _env_int(name: str, default: int) -> int:
+    """Integer env knob; a malformed value falls back to the default
+    (a bad knob must never abort the query)."""
+    try:
+        return int(os.environ.get(name, default))
+    except ValueError:
+        return default
+
+
 def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
     """Return [(local_path, row_group_index)] for a bare local parquet
     scan of ``df`` (row_group_index -1 = whole file), or None if the
@@ -409,7 +418,7 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
         files = df.inputFiles()
     except Exception:
         return None
-    max_files = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", "65536"))
+    max_files = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", 65536)
     if not files or len(files) > max_files:
         return None
     paths = []
@@ -418,7 +427,7 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
         if parsed.scheme not in ("file", ""):
             return None
         paths.append(urllib.parse.unquote(parsed.path))
-    max_footers = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", "4096"))
+    max_footers = _env_int("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", 4096)
     # below ~1M total rows the path's constant cost (plan probe, footer
     # read, one extra job) exceeds the per-row feed saving — measured
     # crossover on the alternating frozen-bench A/B: 600k-row tables
@@ -426,7 +435,7 @@ def _direct_scan_tasks(df: DataFrame, cols: list, wants: list) -> list | None:
     # threshold is work-based, not scale-tuned: any production input is
     # far above it, and the no-footer branch (file count beyond the
     # driver's footer budget) implies scale and always engages.
-    min_rows = int(os.environ.get("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", "1000000"))
+    min_rows = _env_int("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", 1_000_000)
     tasks: list = []
     try:
         if len(paths) <= max_footers:
@@ -672,24 +681,17 @@ def sketch_partials(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
                 upd(key if isinstance(key, tuple) else (key,), sub)
 
         for pdf in batches:
-            col_in = pdf["__in"]
-            mask = col_in.notna()
+            mask = pdf["__in"].notna()
             if not mask.all():
                 pdf = pdf[mask]
-                col_in = pdf["__in"]
             if len(pdf) == 0:
                 continue
-            if keys:
-                buf.append(pdf)
-                buf_rows += len(pdf)
-                if buf_rows >= FLUSH_ROWS:
-                    flush()
-            else:
-                upd((), col_in)
+            buf.append(pdf)
+            buf_rows += len(pdf)
+            if buf_rows >= FLUSH_ROWS:
+                flush()
         flush()
         rows = [list(k) + [s.to_bytes()] for k, s in states.items()]
-        if not rows and not keys:
-            rows = [[spec.new().to_bytes()]]
         yield pd.DataFrame(rows, columns=keys + [STATE_COL])
 
     return prepared.mapInPandas(build, schema=out_schema)
@@ -852,7 +854,16 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, spec: SketchSpec,
                hash_mode: str = "xxhash64", fan_in: int | None | str = "auto") -> DataFrame:
     """Full two-level sketch aggregation → (keys..., sketch).  Global
     aggregates over >64 partitions automatically get a third (fan-in)
-    merge level — see ``merge_partials``."""
+    merge level — see ``merge_partials``.
+
+    hll/cms/bloom state is byte-identical whichever path builds it.
+    tdigest/kll state is not: the direct parquet row-group read
+    (``_direct_parquet_partials``) cuts partials at row-group
+    boundaries, the classic Arrow feed at batch boundaries, and both
+    sketches compact as they fill, so their bytes depend on where a
+    partial was cut.  The two paths can therefore return different
+    bytes, while every quantile of either stays inside the
+    sketch's published rank bound."""
     return merge_partials(sketch_partials(df, keys, col, spec, hash_mode), keys, spec, fan_in)
 
 
@@ -898,7 +909,7 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
         elif mode == "hash":
             expr = c.cast("string")
         elif mode == "value":
-            expr = c.cast("double")
+            expr = c.try_cast("double")  # ANSI-safe: malformed → null, dropped
         else:
             expr = c.cast("string")
         proj.append(expr.alias(f"__in_{name}"))
@@ -952,14 +963,9 @@ def multi_sketch_agg(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]],
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if keys:
-                for key, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    upd(key if isinstance(key, tuple) else (key,), sub)
-            else:
-                upd((), pdf)
+            for key, sub in pdf.groupby(keys, dropna=False, sort=False):
+                upd(key if isinstance(key, tuple) else (key,), sub)
         rows = [list(k) + [grp[n].to_bytes() for n in names] for k, grp in states.items()]
-        if not rows and not keys:
-            rows = [[specs[n].new().to_bytes() for n in names]]
         yield pd.DataFrame(rows, columns=keys + names)
 
     partials = prepared.mapInPandas(build, schema=out_schema)

@@ -11,9 +11,32 @@ exposed two ways:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .agg import SketchSpec, collect_sketch, sketch_agg, sketch_from_bytes
+
+# a tuple, copied into each schema: a StructType keeps (and .add()
+# appends to) the list it was built from
+_TOPK_FIELDS = (
+    T.StructField("item", T.StringType()),
+    T.StructField("count", T.LongType()),
+    T.StructField("error", T.LongType()),
+    T.StructField("rank", T.IntegerType()),
+)
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """DataFrame over driver-side Python rows as an Arrow-backed
+    ``LocalRelation``: collecting it (or a projection of it, which the
+    optimizer folds into the relation) runs no Spark job and no Python
+    task, whatever the session's Arrow setting.  ``createDataFrame`` of
+    a plain list instead plans a ``LogicalRDD`` over a pickled Python
+    RDD, and every collect of it starts one Python task per partition."""
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -50,8 +73,8 @@ def approx_count_distinct(df: DataFrame, col: str, keys: list[str] | None = None
         # skips the merge exchange/stage AND the ArrowEvalPython
         # finalize stage; value identical (same sketch bytes)
         sk = collect_sketch(merged)
-        return df.sparkSession.createDataFrame(
-            [(float(sk.cardinality()),)],
+        return _local_frame(
+            df.sparkSession, [(float(sk.cardinality()),)],
             T.StructType([T.StructField("approx_distinct", T.DoubleType())]))
     return merged.select(*keys, hll_cardinality(F.col("sketch")).alias("approx_distinct"))
 
@@ -66,8 +89,8 @@ def approx_quantiles(df: DataFrame, col: str, qs: list[float],
     if not keys and hasattr(merged, "_slp_driver_fold"):
         # r8: same driver-side global finalize as approx_count_distinct
         sk = collect_sketch(merged)
-        return df.sparkSession.createDataFrame(
-            [tuple(float(sk.quantile(q)) for q in qs)],
+        return _local_frame(
+            df.sparkSession, [tuple(float(sk.quantile(q)) for q in qs)],
             T.StructType([T.StructField(n, T.DoubleType()) for n in names]))
     cols = [quantile_udf(q)(F.col("sketch")).alias(n) for q, n in zip(qs, names)]
     return merged.select(*keys, *cols)
@@ -85,20 +108,9 @@ def approx_topk(df: DataFrame, col: str, k: int, capacity: int | None = None,
         sk = collect_sketch(merged)
         rows = [(str(item), int(cnt), int(err), i)
                 for i, (item, cnt, err) in enumerate(sk.top_k(k), 1)]
-        schema = T.StructType([
-            T.StructField("item", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("error", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-        ])
-        return df.sparkSession.createDataFrame(rows, schema)
+        return _local_frame(df.sparkSession, rows, T.StructType(list(_TOPK_FIELDS)))
 
-    out_fields = [merged.schema[kk] for kk in keys] + [
-        T.StructField("item", T.StringType()),
-        T.StructField("count", T.LongType()),
-        T.StructField("error", T.LongType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
+    out_fields = [merged.schema[kk] for kk in keys] + list(_TOPK_FIELDS)
 
     def explode_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -121,7 +133,8 @@ def cms_frequencies(df: DataFrame, col: str, probe_items: list, eps: float = 1e-
     JVM xxhash64 the update path used."""
     spark = df.sparkSession
     cms = collect_sketch(sketch_agg(df, [], col, SketchSpec("cms", eps=eps, confidence=confidence), **kw))
-    probes = spark.createDataFrame([(str(i),) for i in probe_items], ["item"])
+    probes = _local_frame(spark, [(str(i),) for i in probe_items],
+                          T.StructType([T.StructField("item", T.StringType())]))
     # hash probe items the same way the update path hashed df[col]; a
     # probe that cannot cast to the column's type can never equal any
     # item of the column, so its exact count is 0 — report that instead
@@ -141,7 +154,9 @@ def cms_frequencies(df: DataFrame, col: str, probe_items: list, eps: float = 1e-
     if valid.any():
         est[valid] = cms.estimate_hashed(
             np.array([h for h in hs if h is not None], dtype=np.int64))
-    return spark.createDataFrame(list(zip(items, [int(e) for e in est])), ["item", "est_count"])
+    return _local_frame(spark, list(zip(items, [int(e) for e in est])),
+                        T.StructType([T.StructField("item", T.StringType()),
+                                      T.StructField("est_count", T.LongType())]))
 
 
 def hll_intersection_estimate(sk_a, sk_b) -> float:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
 from ..agg import STATE_COL, SketchSpec, sketch_from_bytes
+from ..functions import _local_frame
 from ..sketches.kll import KLL
 from ..sketches.tdigest import TDigest
 
@@ -154,7 +155,7 @@ class CheckpointedSketchJob:
             marker_schema = T.StructType([
                 T.StructField(f.name, f.dataType, True) for f in out_schema.fields
             ])
-            (self.spark.createDataFrame(marker_rows, schema=marker_schema)
+            (_local_frame(self.spark, marker_rows, marker_schema)
              .write.mode("append").parquet(self.partials_path))
         return len(todo)
 

@@ -179,7 +179,8 @@ def windowed_streaming_sketch(stream_df: DataFrame, ts_col: str, duration: str,
     if mode == "hash":
         in_col = F.xxhash64(c).alias("__in")
     elif mode == "value":
-        in_col = c.cast("double").alias("__in")
+        c = c.try_cast("double")  # ANSI-safe; filter below masks failed casts
+        in_col = c.alias("__in")
     elif mode == "ivalue":
         c = c.try_cast("long")
         in_col = c.alias("__in")
@@ -253,7 +254,8 @@ def _keyed_prepared(stream_df: DataFrame, keys: list[str], col: str,
     if mode == "hash":
         in_col = F.xxhash64(c).alias("__in")
     elif mode == "value":
-        in_col = c.cast("double").alias("__in")
+        c = c.try_cast("double")  # ANSI-safe; filter below masks failed casts
+        in_col = c.alias("__in")
     elif mode == "ivalue":
         c = c.try_cast("long")  # ANSI-safe; filter below masks failed casts
         in_col = c.alias("__in")

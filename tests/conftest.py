@@ -1,3 +1,5 @@
+import contextlib
+import itertools
 import os
 
 import pytest
@@ -33,3 +35,42 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Context manager yielding a list that, on exit, holds the ids of
+    the Spark jobs its body started (the body runs under a fresh job
+    group).  The status tracker learns of jobs through the listener bus,
+    so the exit waits for the bus to drain first."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def jobs_started():
+        group = f"spark-jobs-{next(_job_groups)}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, "jobs counted by a test")
+        try:
+            yield jobs
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs_started
+
+
+@pytest.fixture
+def no_spark_jobs(spark_jobs):
+    """Context manager asserting its body starts no Spark job."""
+
+    @contextlib.contextmanager
+    def guard():
+        with spark_jobs() as jobs:
+            yield
+        assert jobs == [], f"expected no Spark job, started {jobs}"
+
+    return guard

@@ -18,6 +18,7 @@ Contract under test:
 from __future__ import annotations
 
 import os
+from unittest import mock
 
 import numpy as np
 import pyarrow as pa
@@ -47,18 +48,17 @@ def _engage_at_any_size():
     os.environ.pop("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", None)
 
 
+def _direct_scan(switch: str):
+    """Set the SPARK_GRAFT_DIRECT_SCAN kill switch for a ``with`` body;
+    the previous environment comes back after, also when the body fails."""
+    return mock.patch.dict(os.environ, {"SPARK_GRAFT_DIRECT_SCAN": switch})
+
+
 def _both(df, col, spec, hash_mode="xxhash64"):
-    old = os.environ.get("SPARK_GRAFT_DIRECT_SCAN")
-    try:
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
+    with _direct_scan("1"):
         direct = collect_sketch(sketch_agg(df, [], col, spec, hash_mode))
-        os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
+    with _direct_scan("0"):
         classic = collect_sketch(sketch_agg(df, [], col, spec, hash_mode))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
-        else:
-            os.environ["SPARK_GRAFT_DIRECT_SCAN"] = old
     return direct, classic
 
 
@@ -73,6 +73,25 @@ def test_min_rows_threshold(spark, sf_dir):
     finally:
         os.environ["SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS"] = "0"
     assert _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64") is not None
+
+
+@pytest.mark.parametrize("knob,engages", [
+    ("SPARK_GRAFT_DIRECT_SCAN_MAX_FILES", True),
+    ("SPARK_GRAFT_DIRECT_SCAN_MAX_FOOTERS", True),
+    # the default row threshold (1M) is far above this fixture
+    ("SPARK_GRAFT_DIRECT_SCAN_MIN_ROWS", False),
+])
+def test_malformed_env_knob_falls_back_to_default(spark, sf_dir, monkeypatch, knob, engages):
+    """A knob that is not an integer takes its default; it never aborts
+    the query, and the sketch keeps the classic-path bytes."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    hll = SketchSpec("hll", p=12)
+    _, classic = _both(li, "l_orderkey", hll)
+    monkeypatch.setenv(knob, "abc")
+    partials = _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64")
+    assert (partials is not None) == engages
+    got = collect_sketch(sketch_agg(li, [], "l_orderkey", hll))
+    assert got.to_bytes() == classic.to_bytes()
 
 
 def test_xxhash64_long_golden_and_fuzz(spark):
@@ -186,11 +205,10 @@ def _both_keyed(df, keys, col, spec):
         out["sketch"] = out["sketch"].map(bytes)
         return out.sort_values(keys, na_position="first",
                                ignore_index=True)
-    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "1"
-    direct = run()
-    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-    classic = run()
-    os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
+    with _direct_scan("1"):
+        direct = run()
+    with _direct_scan("0"):
+        classic = run()
     return direct, classic
 
 
@@ -254,11 +272,8 @@ def test_ineligible_shapes_fall_back(spark, sf_dir):
     assert _direct_parquet_partials(li, [], "l_partkey",
         SketchSpec("cms", eps=1e-3, confidence=0.99, conservative=True),
         "xxhash64") is None
-    os.environ["SPARK_GRAFT_DIRECT_SCAN"] = "0"
-    try:
+    with _direct_scan("0"):
         assert _direct_parquet_partials(li, [], "l_orderkey", hll, "xxhash64") is None
-    finally:
-        os.environ.pop("SPARK_GRAFT_DIRECT_SCAN", None)
     # and the fallback computes the same bytes as the engaged path
     direct, classic = _both(li, "l_orderkey", hll)
     assert direct.to_bytes() == classic.to_bytes()

@@ -12,6 +12,7 @@ from stream_lib_spark.agg import (
     SketchSpec,
     collect_sketch,
     merge_partials,
+    multi_sketch_agg,
     sketch_agg,
     sketch_from_bytes,
     sketch_partials,
@@ -195,3 +196,27 @@ def test_salted_two_phase_exact_agg(spark):
     direct = t.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
     assert two_phase.exceptAll(direct).count() == 0
     assert direct.exceptAll(two_phase).count() == 0
+
+
+def _digest_of_valid(blob):
+    """The digest holds exactly the two valid values of
+    ``["1.5", "oops", "2.5", None]``."""
+    sk = sketch_from_bytes(bytes(blob))
+    assert (sk.total, sk.vmin, sk.vmax) == (2.0, 1.5, 2.5)
+    assert sorted(sk.means) == [1.5, 2.5]
+
+
+@pytest.mark.parametrize("keys", [[], ["k"]], ids=["global", "keyed"])
+def test_malformed_value_strings_are_dropped(spark, keys):
+    """A value-mode sketch over a string column drops what does not
+    parse as a double, on every build path: under ANSI mode (the Spark 4
+    default) a plain cast would abort the job instead."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([("a", "1.5"), ("a", "oops"), ("a", "2.5"), ("a", None)],
+                               "k string, v string")
+    spec = SketchSpec("tdigest", compression=100.0)
+    single = sketch_agg(df, keys, "v", spec).collect()
+    multi = multi_sketch_agg(df, {"d": ("v", spec)}, keys).collect()
+    assert len(single) == len(multi) == 1
+    _digest_of_valid(single[0]["sketch"])
+    _digest_of_valid(multi[0]["d"])

@@ -493,3 +493,35 @@ def test_kill_mid_stream_resume_equals_uninterrupted(spark, tmp_path, sf_dir):
     assert store.versions() == sorted(store.versions())
     _, last_id = store.read()
     assert last_id == n_drops - 1
+
+
+def test_malformed_value_strings_are_dropped(spark, dirs):
+    """Both streaming projections drop a value that does not parse as a
+    double, as the batch builds do; under ANSI mode a plain cast would
+    fail the stream instead."""
+    import pandas as pd
+
+    from stream_lib_spark.agg import sketch_from_bytes
+    from stream_lib_spark.streaming import keyed_streaming_sketch, windowed_streaming_sketch
+
+    path = dirs["input"] + "-malformed"
+    spark.createDataFrame(pd.DataFrame({
+        "ts": pd.to_datetime(["2026-01-01 00:10"] * 4),
+        "k": ["a"] * 4,
+        "v": ["1.5", "oops", "2.5", None],
+    })).write.parquet(path)
+    src = spark.read.parquet(path)
+    spec = SketchSpec("tdigest", compression=100.0)
+    outs = {
+        "keyed": (keyed_streaming_sketch(
+            spark.readStream.schema(src.schema).parquet(path), ["k"], "v", spec), "k"),
+        "windowed": (windowed_streaming_sketch(
+            spark.readStream.schema(src.schema).parquet(path)
+            .withColumn("ts", F.col("ts").cast("timestamp")),
+            "ts", "1 hour", "v", spec, watermark="1 hour"), "window_start"),
+    }
+    for name, (out, key_col) in outs.items():
+        final = _final_by_batch(out, key_col, f"{dirs['ckpt']}-malformed-{name}")
+        assert len(final) == 1, name
+        sk = sketch_from_bytes(bytes(next(iter(final.values()))["sketch"]))
+        assert (sk.total, sk.vmin, sk.vmax) == (2.0, 1.5, 2.5), name
